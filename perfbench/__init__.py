@@ -1,0 +1,5 @@
+"""Repository benchmark for the wormpy_spark crawl engine.
+
+Entry point: ``python3 perfbench/run.py --workload <name> --seed <n>
+--seconds <s> --trace <0|1>``. See ``perfbench/README.md``.
+"""
