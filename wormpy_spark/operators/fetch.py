@@ -34,6 +34,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
 
 from ..functions.extract import (
     DYNAMIC_THRESHOLD,
@@ -67,13 +68,14 @@ PAGES_SCHEMA = (
 # layout, sinks, and resume are unchanged.
 PAGES_SCHEMA_EXPAND = PAGES_SCHEMA + ", discovered_norm array<string>"
 
-# Arrow field layout matching PAGES_SCHEMA — the kernel yields
-# RecordBatches built column-wise with these exact types (mapInArrow
-# validates the schema; map values are nullable: title may be None).
-def _pages_arrow_fields(expand: bool):
-    import pyarrow as pa
-
-    fields = [
+# Arrow layout of PAGES_SCHEMA — the one definition of the pages
+# Arrow types: the kernel yields RecordBatches built column-wise with
+# exactly these (mapInArrow validates the schema; map values are
+# nullable: title may be None), and the driver fast round writes its
+# snapshot files under it (plans/fastround.py). tests/test_fastround.py
+# pins it to the PAGES_SCHEMA DDL.
+PAGES_ARROW_SCHEMA = pa.schema(
+    [
         ("seq", pa.int64()),
         ("round", pa.int32()),
         ("url_norm", pa.string()),
@@ -88,9 +90,16 @@ def _pages_arrow_fields(expand: bool):
         ("attempts", pa.int32()),
         ("fetch_failed_first", pa.bool_()),
     ]
-    if expand:
-        fields.append(("discovered_norm", pa.list_(pa.string())))
-    return fields
+)
+PAGES_ARROW_SCHEMA_EXPAND = PAGES_ARROW_SCHEMA.append(
+    pa.field("discovered_norm", pa.list_(pa.string()))
+)
+
+
+def _pages_arrow_fields(expand: bool) -> list[tuple[str, pa.DataType]]:
+    """(name, type) pairs of the kernel's output layout."""
+    schema = PAGES_ARROW_SCHEMA_EXPAND if expand else PAGES_ARROW_SCHEMA
+    return [(f.name, f.type) for f in schema]
 
 
 def _isnull(v) -> bool:
@@ -211,7 +220,7 @@ def process_row(row: dict, discovery: bool, extract_memo: dict | None = None) ->
 def make_fetch_extract(
     discovery: bool, scope_base: str | None = None, probe_skip_bc=None
 ):
-    """mapInPandas function over the (due frontier ⋈ web) join.
+    """mapInArrow function over the (due frontier ⋈ web) join.
 
     Accepts bodies either raw (``body``/``dynamic_body``) or
     zlib-compressed (``body_z``/``dynamic_body_z``, written by
@@ -223,11 +232,10 @@ def make_fetch_extract(
     ``scope_base``: when set, each row additionally carries
     ``discovered_norm`` — sorted({normalize(l)}) restricted to the
     scope prefix, the reference's per-parent expansion set
-    (scraper.py:99-102; identical to plans/fastround.py:218-224) —
-    and the output schema is PAGES_SCHEMA_EXPAND. Normalization is
-    memoized per task: link batches repeat nav/boilerplate URLs
-    heavily, so unique-then-map cuts urlparse calls 10-30x (same trick
-    as functions.urlnorm.canonicalize_udf).
+    (scraper.py:99-102) — and the output schema is PAGES_SCHEMA_EXPAND.
+    Normalization is memoized per task: link batches repeat
+    nav/boilerplate URLs heavily, so unique-then-map cuts urlparse
+    calls 10-30x (same trick as functions.urlnorm.canonicalize_udf).
 
     ``probe_skip_bc``: broadcast frozenset of probe-skip URLs (the
     suspicious image/* set, P5/P6). When given, those URLs are dropped
@@ -246,16 +254,16 @@ def make_fetch_extract(
     0.5 ms/page in-situ vs 0.22 ms/page of actual extraction.
     ``RecordBatch.to_pylist``/``pa.array`` move the same data through
     pyarrow's C paths, and left-join NULLs arrive as None instead of
-    pandas NaN-coerced floats."""
+    pandas NaN-coerced floats. The driver fast round calls the same
+    function in-process on batches it joined itself
+    (plans/fastround.py), so there is one extraction implementation."""
     import zlib
-
-    import pyarrow as pa
 
     from ..functions.urlnorm import normalize_url
 
-    fields = _pages_arrow_fields(expand=scope_base is not None)
-    names = [n for n, _ in fields]
-    out_schema = pa.schema(fields)
+    out_schema = (
+        PAGES_ARROW_SCHEMA if scope_base is None else PAGES_ARROW_SCHEMA_EXPAND
+    )
 
     def fn(batches):
         memo: dict[str, str] = {}
@@ -291,8 +299,8 @@ def make_fetch_extract(
                         }
                     )
             arrays = [
-                pa.array([o[name] for o in rows], type=typ)
-                for name, typ in fields
+                pa.array([o[f.name] for o in rows], type=f.type)
+                for f in out_schema
             ]
             yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
 

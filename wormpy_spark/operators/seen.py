@@ -74,30 +74,6 @@ class Bloom:
         return Bloom(self.n_bits, self.n_hashes, self.bits | other.bits)
 
 
-def build_bloom(seen: DataFrame, hash_col: str, expected: int, fpp: float = 0.01) -> Bloom:
-    """Distributed build: each partition computes a partial bitmap via
-    mapInPandas (map-side combine); partials are OR-ed on the driver.
-    Only ceil(n_bits/8) bytes per partition cross the wire, never keys."""
-    proto = Bloom.sized(expected, fpp)
-    n_bits, n_hashes = proto.n_bits, proto.n_hashes
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        b = Bloom(n_bits, n_hashes)
-        any_rows = False
-        for pdf in batches:
-            if len(pdf):
-                any_rows = True
-                b.add(pdf[hash_col].to_numpy(np.int64))
-        if any_rows:
-            yield pd.DataFrame({"bits": [b.bits.tobytes()]})
-
-    parts = seen.select(hash_col).mapInPandas(partial, "bits binary").collect()
-    out = Bloom(n_bits, n_hashes)
-    for row in parts:
-        out.bits |= np.frombuffer(row["bits"], np.uint8)
-    return out
-
-
 def build_bloom_shards(
     seen: DataFrame,
     hash_col: str,

@@ -22,6 +22,8 @@ sessionization as the stateful/streaming analogue (§2.7).
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -30,23 +32,25 @@ TABLES = (
 ).split()
 
 
-# (session id, table name) -> registered sf_dir. View registration is
+# session -> {table name: registered sf_dir}. View registration is
 # metadata-only (temp views are lazy scans — every query still computes
 # from parquet), but each registration re-reads the parquet footer for
 # schema; a 35-query benchmark sweep re-registered 10 tables per query
-# call. Memoize per session+path; a different sf_dir re-registers.
-_VIEWS_REGISTERED: dict[tuple[str, str], str] = {}
+# call. Temp views belong to one SparkSession (``spark.newSession()``
+# shares the context, not the views), so the memo is keyed on the
+# session object; weak keys let a dropped session's entry go with it.
+# A different sf_dir re-registers.
+_VIEWS_REGISTERED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def load_views(spark: SparkSession, sf_dir: str) -> None:
     """Register the sf tables as temp views (idempotent, memoized)."""
-    app = spark.sparkContext.applicationId  # unique per context, unlike id()
+    registered = _VIEWS_REGISTERED.setdefault(spark, {})
     for name in TABLES:
-        key = (app, name)
-        if _VIEWS_REGISTERED.get(key) == sf_dir:
+        if registered.get(name) == sf_dir:
             continue
         spark.read.parquet(f"{sf_dir}/{name}.parquet").createOrReplaceTempView(name)
-        _VIEWS_REGISTERED[key] = sf_dir
+        registered[name] = sf_dir
 
 
 def _sql(statement: str):

@@ -119,10 +119,14 @@ class CrawlConfig:
     # reorders, so the throttle is opt-in (SURVEY.md §2.7-T1).
     max_per_host_per_round: int | None = None
     # frontiers at or below this row count run the whole round driver-
-    # side (plans/fastround.py) — one Spark job instead of ~4, killing
-    # the fixed per-round scheduling floor for the tiny head/tail
-    # rounds every crawl has. 0 disables (parity tests compare paths).
-    fast_round_max: int = 4096
+    # side (plans/fastround.py) — one JVM-only Spark job instead of ~4,
+    # killing the fixed per-round floor for the tiny head/tail rounds
+    # every crawl has. Its extraction is serial on the driver, so it
+    # loses to a Spark round past ~2.8k due pages: measured at local[4]
+    # on a 4-core box, round walls (fast vs Spark) were 0.80/2.76 s at
+    # 528 pages, 1.78/2.40 s at 1.9k, 2.37/2.31 s at 2.8k and 3.77/3.06 s
+    # at 3.8k. 0 disables (parity tests compare paths).
+    fast_round_max: int = 2800
 
 
 @dataclass
@@ -491,8 +495,9 @@ def run_crawl(
         t0 = time.time()
         sc.setJobDescription(f"crawl r{r}")
 
-        # ---- driver fast path: whole tiny round in Python, one Spark
-        # job (the web key lookup) — see plans/fastround.py ----
+        # ---- driver fast path: whole tiny round on the driver, one
+        # JVM-only Spark job (the web key lookup collected as Arrow),
+        # the extraction kernel in-process — see plans/fastround.py ----
         if (
             frontier_rows is not None
             and seen_set is not None
@@ -503,8 +508,7 @@ def run_crawl(
             sc.setJobDescription(f"crawl r{r}: fast round")
             fr = run_fast_round(
                 r, frontier_rows, seen_set, processed, budget, base,
-                config, web_fetch, probe_skip_bc.value, robots_cache_obj,
-                probe_skip_bc=probe_skip_bc,
+                config, web_fetch, probe_skip_bc, robots_cache_obj,
             )
             if fr.n_eligible == 0:
                 break
