@@ -3,6 +3,10 @@ parquet+manifest shim can honestly provide — sources/catalog.py)."""
 
 from __future__ import annotations
 
+import json
+
+import pytest
+
 from wormpy_spark.fixtures.webgen import generate_corpus
 from wormpy_spark.plans.crawl import CrawlConfig, run_crawl
 from wormpy_spark.sources.catalog import SnapshotCatalog
@@ -55,6 +59,43 @@ def test_time_travel_and_rollback_resume(spark, tmp_path):
         sitemaps=tables["sitemaps"],
     )
     assert [r["url_norm"] for r in resumed.order.collect()] == want_order
+
+
+def test_resume_refuses_an_incompatible_checkpoint(spark, tmp_path):
+    """Resume reads a checkpoint only under the snapshot format it was
+    written in, and only with the per-host cap and shard count it was
+    written with: a tampered manifest must raise, not resume."""
+    corpus = generate_corpus(seed=11, n_hosts=2, pages_per_host=12, n_images_per_host=4)
+    tables = corpus_to_spark(spark, corpus)
+    cfg = dict(base_url="https://host0.test", budget=50, politeness_seed=7)
+    ckpt = str(tmp_path / "ckpt")
+    run_crawl(
+        spark, tables["web"], CrawlConfig(**cfg, checkpoint_dir=ckpt, max_rounds=1),
+        sitemaps=tables["sitemaps"],
+    )
+    manifest_path = tmp_path / "ckpt" / SnapshotCatalog.MANIFEST
+    good = json.loads(manifest_path.read_text())
+
+    def resume_with(state_edit, **cfg_edit):
+        m = json.loads(json.dumps(good))
+        state_edit(m["state"])
+        manifest_path.write_text(json.dumps(m))
+        return run_crawl(
+            spark, tables["web"],
+            CrawlConfig(**{**cfg, **cfg_edit}, checkpoint_dir=ckpt, resume=True),
+            sitemaps=tables["sitemaps"],
+        )
+
+    with pytest.raises(ValueError, match="format"):
+        resume_with(lambda st: st.pop("format"))
+    with pytest.raises(ValueError, match="format"):
+        resume_with(lambda st: st.update(format=99))
+    with pytest.raises(ValueError, match="max_per_host_per_round"):
+        resume_with(lambda st: None, max_per_host_per_round=3)
+    with pytest.raises(ValueError, match="n_host_shards"):
+        resume_with(lambda st: None, n_host_shards=8)
+    # the untampered checkpoint still resumes
+    assert resume_with(lambda st: None).processed > 1
 
 
 def test_iceberg_config_contract(spark):

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from wormpy_spark.operators.dedup import minhash_lsh_jaccard_pairs
 from wormpy_spark.operators.multimodal import phash_neardup_pairs
-from wormpy_spark.operators.seen import Bloom, anti_join_seen, build_bloom_shards
+from wormpy_spark.operators.seen import Bloom, anti_join_seen, build_bloom_shards_sized
 
 
 def test_minhash_lsh_short_docs_no_crash(spark):
@@ -106,8 +106,13 @@ def test_anti_join_seen_bloom_branch_executes(spark):
 
     seen = keyed(spark.createDataFrame([(i,) for i in range(0, 100, 2)], "k long"))
     cand = keyed(spark.createDataFrame([(i,) for i in range(100)], "k long"))
-    shards = build_bloom_shards(seen, "url_hash", "host_shard", expected_per_shard=64)
+    # shard 0 sized from its expected count, shard 2 from the default
+    shards = build_bloom_shards_sized(
+        seen, "url_hash", "host_shard", {0: 1000}, default_expected=64
+    )
     assert set(shards) == {0, 2}  # even keys → even shards only
+    assert shards[0].n_bits == Bloom.sized(1000).n_bits
+    assert shards[2].n_bits == Bloom.sized(64).n_bits
     assert all(isinstance(b, Bloom) for b in shards.values())
     bc = spark.sparkContext.broadcast(shards)
     out = anti_join_seen(cand, seen, bc, seen_count=50, broadcast_below=0)

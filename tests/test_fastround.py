@@ -21,11 +21,16 @@ from wormpy_spark.operators.fetch import (
     PAGES_SCHEMA,
     PAGES_SCHEMA_EXPAND,
 )
-from wormpy_spark.operators.frontier import FRONTIER_SCHEMA_V2
+from wormpy_spark.operators.frontier import (
+    FRONTIER_SCHEMA_BUCKETED,
+    FRONTIER_SCHEMA_RANKED,
+    FRONTIER_SCHEMA_V2,
+)
 from wormpy_spark.plans.crawl import CrawlConfig, prepare_fetch_table, run_crawl
 from wormpy_spark.plans.fastround import (
     FRONTIER_ARROW_SCHEMA,
     FRONTIER_ARROW_SCHEMA_BUCKETED,
+    FRONTIER_ARROW_SCHEMA_RANKED,
     _lookup_join,
 )
 
@@ -36,9 +41,10 @@ from wormpy_spark.plans.fastround import (
         (PAGES_ARROW_SCHEMA, PAGES_SCHEMA),
         (PAGES_ARROW_SCHEMA_EXPAND, PAGES_SCHEMA_EXPAND),
         (FRONTIER_ARROW_SCHEMA, FRONTIER_SCHEMA_V2),
-        (FRONTIER_ARROW_SCHEMA_BUCKETED, FRONTIER_SCHEMA_V2 + ", seq_bucket int"),
+        (FRONTIER_ARROW_SCHEMA_BUCKETED, FRONTIER_SCHEMA_BUCKETED),
+        (FRONTIER_ARROW_SCHEMA_RANKED, FRONTIER_SCHEMA_RANKED),
     ],
-    ids=["pages", "pages_expand", "frontier", "frontier_bucketed"],
+    ids=["pages", "pages_expand", "frontier", "frontier_bucketed", "frontier_ranked"],
 )
 def test_arrow_schemas_match_spark_ddl(spark, arrow_schema, ddl):
     """Snapshot files written by pyarrow are read back by Spark with

@@ -5,14 +5,20 @@
 - distribution invariance: the crawl's (seq, url) sequence must be
   IDENTICAL at different partition counts — the core property that
   makes the ordering claim survive a 1000-executor cluster
-- checkpoint resume ≡ uninterrupted run
+- checkpoint resume ≡ uninterrupted run, on every round path, with
+  and without the per-host throttle
 - skewed corpus (one host holding ~2/3 of pages) crawls identically
   to the oracle
+- the global seq: bucket offsets ≡ a driver sort, and the property
+  that makes buckets valid under per-host deferral
 """
 
 from __future__ import annotations
 
+import glob
+
 import numpy as np
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 import pytest
 from hypothesis import given, settings
@@ -73,33 +79,49 @@ def test_partition_count_invariance(spark, small_corpus):
     assert o2 == o13 and len(o2) > 5
 
 
-def test_resume_equals_uninterrupted(spark, small_corpus, tmp_path):
+_FULL_RUNS: dict = {}
+
+
+@pytest.mark.parametrize("max_rounds", [1, 2])
+@pytest.mark.parametrize("cap", [None, 3], ids=["uncapped", "cap3"])
+@pytest.mark.parametrize("fast_round_max", [None, 0], ids=["fast_default", "spark"])
+def test_resume_equals_uninterrupted(spark, small_corpus, tmp_path, fast_round_max, cap, max_rounds):
+    """A crawl stopped after ``max_rounds`` and resumed equals the
+    uninterrupted crawl: order and politeness clocks. Covers the
+    driver and Spark round paths, with and without a per-host cap —
+    a capped Spark round that ends a run must not lose the rows it
+    deferred."""
     tables = corpus_to_spark(spark, small_corpus)
-    full = run_crawl(
-        spark, tables["web"],
-        CrawlConfig(base_url="https://host0.test", budget=50, politeness_seed=7),
-        sitemaps=tables["sitemaps"],
-    )
+    cfg = dict(base_url="https://host0.test", budget=50, politeness_seed=7,
+               max_per_host_per_round=cap)
+    if fast_round_max is not None:
+        cfg["fast_round_max"] = fast_round_max
+    key = (fast_round_max, cap)
+    if key not in _FULL_RUNS:
+        full = run_crawl(spark, tables["web"], CrawlConfig(**cfg),
+                         sitemaps=tables["sitemaps"])
+        _FULL_RUNS[key] = (
+            [r["url_norm"] for r in full.order.collect()],
+            {r["host"]: (r["attempts"], round(r["clock_s"], 6))
+             for r in full.host_state.collect()},
+        )
+    full_order, full_state = _FULL_RUNS[key]
     ckpt = str(tmp_path / "ckpt")
     run_crawl(
         spark, tables["web"],
-        CrawlConfig(base_url="https://host0.test", budget=50, politeness_seed=7,
-                    checkpoint_dir=ckpt, max_rounds=1),
+        CrawlConfig(**cfg, checkpoint_dir=ckpt, max_rounds=max_rounds),
         sitemaps=tables["sitemaps"],
     )
     resumed = run_crawl(
         spark, tables["web"],
-        CrawlConfig(base_url="https://host0.test", budget=50, politeness_seed=7,
-                    checkpoint_dir=ckpt, resume=True),
+        CrawlConfig(**cfg, checkpoint_dir=ckpt, resume=True),
         sitemaps=tables["sitemaps"],
     )
-    assert [r["url_norm"] for r in resumed.order.collect()] == [
-        r["url_norm"] for r in full.order.collect()
-    ]
+    assert [r["url_norm"] for r in resumed.order.collect()] == full_order
+    assert len(full_order) > 5
     # politeness clocks must survive the resume too
-    full_state = {r["host"]: (r["attempts"], round(r["clock_s"], 6)) for r in full.host_state.collect()}
     res_state = {r["host"]: (r["attempts"], round(r["clock_s"], 6)) for r in resumed.host_state.collect()}
-    assert full_state == res_state
+    assert res_state == full_state
 
 
 def test_skewed_host_parity(spark):
@@ -118,18 +140,29 @@ def test_skewed_host_parity(spark):
     assert {r["url_norm"] for r in res.seen.collect()} == oracle.seen
 
 
-def test_host_throttle_mode(spark, small_corpus):
+@pytest.mark.parametrize("fast_round_max", [None, 0, 12],
+                         ids=["fast_default", "spark", "handover"])
+def test_host_throttle_mode(spark, small_corpus, fast_round_max):
     """Production politeness throttle (max k fetches/host/round): caps
     per-round host load, defers (never drops) — the final seen set and
-    the per-host relative order match the unthrottled run."""
+    the per-host relative order match the unthrottled run. Runs on the
+    driver rounds, on the Spark rounds (deferral at admission), and
+    with a fast-round frontier handed over to the Spark rounds
+    mid-crawl (the 12 seeds run on the driver; the 18-row frontier
+    they leave, deferred rows and repeats included, does not)."""
     tables = corpus_to_spark(spark, small_corpus)
     base_cfg = dict(base_url="https://host0.test", budget=50, politeness_seed=7)
+    if fast_round_max is not None:
+        base_cfg["fast_round_max"] = fast_round_max
     free = run_crawl(spark, tables["web"], CrawlConfig(**base_cfg), sitemaps=tables["sitemaps"])
     capped = run_crawl(
         spark, tables["web"],
         CrawlConfig(**base_cfg, max_per_host_per_round=3),
         sitemaps=tables["sitemaps"],
     )
+    if fast_round_max == 12:
+        handed = glob.glob(f"{capped.checkpoint_dir}/frontier/snap-000000/*.parquet")
+        assert "host_rank" in pq.read_schema(handed[0]).names
     per_round = {
         (r["round"], r["host"]): r["n"]
         for r in capped.pages.groupBy("round", "host").agg(F.count("*").alias("n")).collect()
@@ -214,17 +247,17 @@ def test_driver_fast_path_equals_spark_path(spark, small_corpus):
     assert len(spark_path[0]) > 5
 
 
-def test_assign_global_seq_bucket_path_equals_sampling(spark):
-    """The deterministic-bucket seq path (driver-known parent_seq
-    bounds, no sampling job) must assign the exact same dense sequence
-    as the range-partition sampling path — with tight bounds, loose
-    bounds, bounds clamping (rows outside [lo, hi]), and empty input."""
+def test_assign_global_seq_equals_sorted_oracle(spark):
+    """assign_global_seq numbers a bucket-stamped frontier exactly as a
+    driver sort of the priority triple does — with tight bucket
+    bounds, loose bounds, clamping bounds (rows outside the range fall
+    into the end buckets), and empty input — and starts no Spark job."""
     import random
 
     from wormpy_spark.operators.frontier import (
         FRONTIER_SCHEMA,
-        PRIORITY_COLS,
         assign_global_seq,
+        seq_bucket_col,
     )
 
     rng = random.Random(31337)
@@ -235,28 +268,83 @@ def test_assign_global_seq_bucket_path_equals_sampling(spark):
             (f"https://h.test/p/{i}", 7, parent, rng.randrange(1, 300),
              f"https://h.test/p/{i}")
         )
+    oracle = [
+        (123 + i, row[0])
+        for i, row in enumerate(sorted(rows, key=lambda t: t[1:4]))
+    ]
     df = spark.createDataFrame(rows, FRONTIER_SCHEMA)
+    sc = spark.sparkContext
+    group = "test_assign_global_seq_equals_sorted_oracle"
+    for lo, span in [(1000, 8000), (0, 100000), (2000, 1000)]:  # tight/loose/clamped
+        stamped = df.withColumn("seq_bucket", seq_bucket_col(lo, span, 8))
+        counts = {
+            r["seq_bucket"]: r["count"]
+            for r in stamped.groupBy("seq_bucket").count().collect()
+        }
+        try:
+            sc.setJobGroup(group, "assign_global_seq")
+            out = assign_global_seq(stamped, counts, start=123)
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert jobs == [], "assign_global_seq started a Spark job"
+        got = sorted((r["seq"], r["url"]) for r in out.select("seq", "url").collect())
+        assert got == oracle, f"bucket range ({lo}, {span}) diverged"
 
-    def run(**kw):
-        out, total, handle = assign_global_seq(df, PRIORITY_COLS, start=123, **kw)
-        got = [
-            (r["seq"], r["url"]) for r in out.select("seq", "url").collect()
-        ]
-        handle.unpersist()
-        return total, sorted(got)
-
-    base_total, base = run()
-    assert base_total == 5000
-    for bounds in [(1000, 9000), (0, 100000), (2000, 3000)]:  # tight/loose/clamped
-        t, got = run(range_bucket=("parent_seq", *bounds))
-        assert t == 5000 and got == base, f"bounds {bounds} diverged"
-
-    empty = spark.createDataFrame([], FRONTIER_SCHEMA)
-    out, total, handle = assign_global_seq(
-        empty, PRIORITY_COLS, start=0, range_bucket=("parent_seq", -1, 0)
+    empty = spark.createDataFrame([], FRONTIER_SCHEMA).withColumn(
+        "seq_bucket", seq_bucket_col(-1, 1, 8)
     )
-    assert total == 0 and out.count() == 0
-    handle.unpersist()
+    assert assign_global_seq(empty, {}, start=0).count() == 0
+
+
+@given(st.data())
+@settings(max_examples=100, deadline=None)
+def test_priority_order_is_parent_seq_order_under_deferral(data):
+    """The premise of the seq buckets: in every frontier of a crawl with
+    per-host deferral, the priority triple's order is non-decreasing in
+    parent_seq — a row enqueued in a later round has a parent fetched
+    in a later round — so any monotone bucket map of parent_seq (with
+    the previous round's seq range as its bounds) is non-decreasing in
+    priority order too. A pure-Python BSP crawl over a random link
+    graph: dedup, seen anti-join, rank per host, defer rank > k."""
+    from wormpy_spark.operators.frontier import seq_bucket
+
+    n_hosts = data.draw(st.integers(1, 3), label="hosts")
+    cap = data.draw(st.integers(1, 4), label="cap")
+    urls = [f"h{i % n_hosts}/{i}" for i in range(40)]
+    links = {
+        u: data.draw(st.lists(st.sampled_from(urls), max_size=6)) for u in urls
+    }
+    seeds = data.draw(st.lists(st.sampled_from(urls), min_size=1, max_size=5), label="seeds")
+    frontier = [(0, -1, i + 1, u) for i, u in enumerate(seeds)]
+    seen: set[str] = set()
+    seq = 0
+    lo, span = -1, 1  # the seeds' parent range
+    for r in range(10):
+        rows = sorted(frontier)  # priority order
+        parents = [row[1] for row in rows]
+        assert parents == sorted(parents), f"round {r}"
+        buckets = [seq_bucket(p, lo, span, 8) for p in parents]
+        assert buckets == sorted(buckets), f"round {r}"
+        first: dict[str, tuple] = {}
+        for row in rows:
+            if row[3] not in seen:
+                first.setdefault(row[3], row)
+        per_host: dict[str, int] = {}
+        due, deferred = [], []
+        for row in first.values():
+            host = row[3].split("/")[0]
+            per_host[host] = per_host.get(host, 0) + 1
+            (due if per_host[host] <= cap else deferred).append(row)
+        if not due:
+            break
+        lo, span = seq, len(due)
+        frontier = list(deferred)
+        for row in due:
+            seen.add(row[3])
+            for pos, child in enumerate(sorted(set(links[row[3]]))):
+                frontier.append((r + 1, seq, pos + 1, child))
+            seq += 1
 
 
 def test_prepared_compressed_web_parity(spark, small_corpus):

@@ -13,33 +13,27 @@ parent in parent processing order, and within a parent in sorted
 url_norm order. BSP rounds therefore reproduce the reference's
 sequential pop order exactly (proof sketch in SURVEY.md §3.2).
 
-``assign_global_seq`` turns that priority order into a dense global
-sequence WITHOUT a single-partition window: range-repartition on the
-priority, per-partition row_number, plus broadcast partition offsets —
-the standard scalable global-rank pattern (no driver collect of rows,
-no one-task sort at 10^10 scale).
+Within one frontier the triple's order is also ``parent_seq`` order,
+per-host deferral included: a row enqueued in round e was discovered
+by a page fetched in round e-1, so its ``parent_seq`` is strictly
+larger than that of every row enqueued earlier (seeds carry -1). That
+is what lets admission stamp each row with a ``seq_bucket`` — a
+monotone map of ``parent_seq`` (``seq_bucket``/``seq_bucket_col``)
+— and publish the per-bucket row counts on the driver.
+``assign_global_seq`` then numbers a frontier with driver-known
+bucket offsets plus a row_number within each bucket: one expression,
+evaluated inside the job that consumes it, no sampling and no extra
+job.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.urlnorm import canonicalize_udf
 
 PRIORITY_COLS = ["round_enqueued", "parent_seq", "sibling_rank"]
-
-
-class _SeqCaches:
-    """Bundle of the two persisted DataFrames assign_global_seq takes;
-    callers release both with one unpersist()."""
-
-    def __init__(self, *dfs):
-        self._dfs = dfs
-
-    def unpersist(self):
-        for d in self._dfs:
-            d.unpersist()
 
 # url_norm rides the frontier: expansions are canonicalized when they
 # are discovered (expand_frontier), so no round ever re-canonicalizes
@@ -55,93 +49,61 @@ FRONTIER_SCHEMA = (
 # v2: admission-derived columns ride the frontier file so no round ever
 # re-derives them — host (a pandas-UDF urlparse pass over the engine's
 # biggest row stream), url_hash, host_shard are computed exactly once,
-# at admission. Readers stay compatible with v1 files (seeds, old
-# checkpoints): the crawl loop backfills the columns when absent.
+# at admission.
 FRONTIER_SCHEMA_V2 = FRONTIER_SCHEMA + ", host string, url_hash long, host_shard int"
+# what a Spark round consumes: + the seq bucket, and under a per-host
+# cap the row's rank within its host in priority order (rank > k rows
+# are deferred to the next admission)
+FRONTIER_SCHEMA_BUCKETED = FRONTIER_SCHEMA_V2 + ", seq_bucket int"
+FRONTIER_SCHEMA_RANKED = FRONTIER_SCHEMA_V2 + ", host_rank int, seq_bucket int"
+
+
+def seq_bucket(parent_seq: int, lo: int, span: int, n_buckets: int) -> int:
+    """The seq bucket of one row: ``parent_seq`` mapped monotonically
+    onto [0, n_buckets). ``[lo, lo + span)`` is the seq range of the
+    round that discovered the frontier; rows outside it (deferred rows,
+    loose bounds) clamp to the end buckets, which skews bucket sizes but
+    never the order. ``seq_bucket_col`` is the same formula as a Spark
+    column; integer DIV keeps it exactly monotone at any magnitude."""
+    b = (parent_seq - lo) * n_buckets // max(span, 1)
+    return min(n_buckets - 1, max(0, b))
+
+
+def seq_bucket_col(lo: int, span: int, n_buckets: int) -> Column:
+    b = F.expr(
+        f"CAST(((parent_seq - {int(lo)}L) * {n_buckets}L) DIV {max(int(span), 1)}L AS INT)"
+    )
+    return F.least(F.lit(n_buckets - 1), F.greatest(F.lit(0), b))
 
 
 def assign_global_seq(
     df: DataFrame,
-    order_cols: list[str] | None = None,
+    bucket_counts: dict[int, int],
     start: int = 0,
     seq_col: str = "seq",
-    n_partitions: int | None = None,
-    range_bucket: tuple[str, int, int] | None = None,
-) -> tuple[DataFrame, int, DataFrame]:
-    """Dense 0-based global sequence in (order_cols) order, offset by
-    ``start``. Scales: range partition → local rank → offset map.
-    ``order_cols`` must be a total order (the priority triple is unique
-    by construction). Returns (df_with_seq, row_count, cache_handle) —
-    the count is a free by-product of the offset computation.
-
-    Default (sampling) path — TWO caches bundled into the handle:
-    - the INPUT is persisted because repartitionByRange's range
-      partitioner runs a separate SAMPLING job over its child — without
-      the cache every caller's upstream chain (the crawl's whole
-      filter pipeline) is computed twice per call;
-    - the ranged output is persisted because repartitionByRange samples
-      its boundaries per execution (RDD-id-seeded), so without it the
-      counts job and the downstream job could place a boundary row in
-      different partitions, corrupting the offsets.
-
-    ``range_bucket=(col, lo, hi)`` path — when the CALLER already knows
-    value bounds of a column such that (a) ``col`` rides ``order_cols``'
-    total order (every earlier order_cols prefix is constant across the
-    input, as the crawl frontier's ``round_enqueued`` is whenever no
-    per-host deferral is configured) and (b) all values fall in
-    [lo, hi], bucket boundaries are DETERMINISTIC arithmetic — no
-    sampling job, no second cache, ONE blocking action instead of two
-    per call. Bounds need not be tight (looser bounds only skew bucket
-    sizes, never ordering): bucketing is a monotone map, so
-    cross-bucket order is exact and the within-bucket window restores
-    the full total order.
-    The counts collect materializes the cache(s); the caller must
-    unpersist the handle once downstream results are materialized."""
-    order_cols = order_cols or PRIORITY_COLS
-    spark = df.sparkSession
-    if n_partitions is None:
-        n_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if range_bucket is not None:
-        col, lo, hi = range_bucket
-        span = max(int(hi) - int(lo), 1)
-        # integer DIV keeps the map exactly monotone at any magnitude
-        bucket = F.expr(
-            f"CAST((({col} - {int(lo)}L) * {n_partitions}L) DIV {span}L AS INT)"
-        )
-        bucket = F.least(
-            F.lit(n_partitions - 1), F.greatest(F.lit(0), bucket)
-        )
-        ranged = df.withColumn("_pid", bucket).persist()
-        handle_dfs = (ranged,)
-    else:
-        src = df.persist()
-        ranged = src.repartitionByRange(
-            n_partitions, *[F.col(c) for c in order_cols]
-        )
-        ranged = ranged.withColumn("_pid", F.spark_partition_id()).persist()
-        handle_dfs = (src, ranged)
-    counts = {r["_pid"]: r["cnt"] for r in ranged.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()}
+) -> DataFrame:
+    """Dense global sequence in PRIORITY_COLS order, offset by
+    ``start``, for a frontier stamped with ``seq_bucket``.
+    ``bucket_counts`` are its rows per bucket, known on the driver
+    (admission's Observation), so each bucket's offset is driver
+    arithmetic and a row's seq is its offset plus its row_number
+    within the bucket. Buckets are monotone in the priority order (see
+    the module docstring), so the result equals a global sort. Builds
+    an expression only: no Spark job runs here."""
     offsets: dict[int, int] = {}
     acc = start
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    total = acc - start
-    handle = _SeqCaches(*handle_dfs)
-    if not offsets:  # empty input — keep the schema, no rows
-        return ranged.drop("_pid").withColumn(seq_col, F.lit(0).cast("long")), 0, handle
-    mapping = F.create_map(
-        *[F.lit(x) for pid_off in offsets.items() for x in pid_off]
+    for b in sorted(bucket_counts):
+        if bucket_counts[b]:
+            offsets[b] = acc
+            acc += bucket_counts[b]
+    if not offsets:  # no rows to number — keep the schema
+        return df.withColumn(seq_col, F.lit(None).cast("long"))
+    mapping = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
+    w = Window.partitionBy("seq_bucket").orderBy(*[F.col(c) for c in PRIORITY_COLS])
+    return df.withColumn(
+        seq_col,
+        (mapping[F.col("seq_bucket")] + F.row_number().over(w) - 1).cast("long"),
     )
-    w = Window.partitionBy("_pid").orderBy(*[F.col(c) for c in order_cols])
-    out = (
-        ranged.withColumn(
-            seq_col,
-            (mapping[F.col("_pid")] + F.row_number().over(w) - 1).cast("long"),
-        )
-        .drop("_pid")
-    )
-    return out, total, handle
 
 
 def dedup_within_round(df: DataFrame, key: str = "url_norm") -> DataFrame:
@@ -177,8 +139,9 @@ def expand_frontier(
     distinct+sorted expansion set — operators/fetch.py), the per-parent
     set is already one row's array, so a single posexplode yields the
     sibling order with NO shuffle and NO canonicalize-UDF pass over the
-    raw link stream. The groupBy(collect_set) path below remains for
-    pages produced without the column (older snapshots, direct tests).
+    raw link stream. The groupBy(collect_set) path below serves pages
+    without the column: committed pages snapshots, which a resume
+    expands when the last round's expansion was deferred.
     """
     if "discovered_norm" in pages.columns:
         return (

@@ -74,48 +74,6 @@ class Bloom:
         return Bloom(self.n_bits, self.n_hashes, self.bits | other.bits)
 
 
-def build_bloom_shards(
-    seen: DataFrame,
-    hash_col: str,
-    shard_col: str,
-    expected_per_shard: int,
-    fpp: float = 0.01,
-) -> dict[int, Bloom]:
-    """Per-host-shard sidecar build: each partition emits one partial
-    bitmap PER SHARD it holds; the driver ORs partials shard-wise. No
-    bitmap ever covers more than one shard's keys, so the per-object
-    memory stays bounded no matter the total seen count (the 10^9-key
-    posture: ~1.2 GB total splits into n_shards independently
-    broadcastable pieces)."""
-    proto = Bloom.sized(expected_per_shard, fpp)
-    n_bits, n_hashes = proto.n_bits, proto.n_hashes
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[int, Bloom] = {}
-        for pdf in batches:
-            for shard, grp in pdf.groupby(shard_col):
-                b = acc.setdefault(int(shard), Bloom(n_bits, n_hashes))
-                b.add(grp[hash_col].to_numpy(np.int64))
-        if acc:
-            yield pd.DataFrame(
-                {
-                    "shard": list(acc),
-                    "bits": [b.bits.tobytes() for b in acc.values()],
-                }
-            )
-
-    parts = (
-        seen.select(hash_col, shard_col)
-        .mapInPandas(partial, "shard int, bits binary")
-        .collect()
-    )
-    out: dict[int, Bloom] = {}
-    for row in parts:
-        b = out.setdefault(int(row["shard"]), Bloom(n_bits, n_hashes))
-        b.bits |= np.frombuffer(row["bits"], np.uint8)
-    return out
-
-
 def build_bloom_shards_sized(
     seen: DataFrame,
     hash_col: str,
@@ -124,10 +82,16 @@ def build_bloom_shards_sized(
     default_expected: int,
     fpp: float = 0.01,
 ) -> dict[int, Bloom]:
-    """Like build_bloom_shards but with PER-SHARD sizing. Uniform
-    sizing (total/n_shards) saturates the hot shard of a skewed (or
-    single-host) crawl — at 16x skew the hot shard gets ~0.6 bits/key
-    and its FPP approaches 1, sending every candidate to the exact
+    """Per-host-shard sidecar build: each partition emits one partial
+    bitmap PER SHARD it holds; the driver ORs partials shard-wise. No
+    bitmap ever covers more than one shard's keys, so the per-object
+    memory stays bounded no matter the total seen count (the 10^9-key
+    posture: ~1.2 GB total splits into n_shards independently
+    broadcastable pieces).
+
+    Each shard is sized on its own: uniform sizing (total/n_shards)
+    saturates the hot shard of a skewed (or single-host) crawl — at
+    16x skew the hot shard gets ~0.6 bits/key and its FPP approaches 1, sending every candidate to the exact
     anti-join while still paying the bitmap build. Callers size each
     shard from its observed key share extrapolated to the full crawl
     budget, so one sizing lasts the whole crawl and the bitmaps can be
@@ -248,7 +212,8 @@ def anti_join_seen(
       join entirely (no shuffle), bloom-positives take the exact
       shuffle anti-join — the bitmap broadcast is ~1 MB/450k keys vs
       tens of MB for raw keys. The sidecar is a dict of per-host-shard
-      bitmaps (build_bloom_shards); candidates must carry ``shard_col``;
+      bitmaps (build_bloom_shards_sized); candidates must carry
+      ``shard_col``;
     - fallback: plain shuffle anti-join.
     """
     seen_keys = seen.select(hash_col, key_col)

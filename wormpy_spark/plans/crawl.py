@@ -1,20 +1,36 @@
 """The BSP crawl driver loop (T4; SURVEY.md §3.2 engine lifecycle).
 
-Each round is one Catalyst-optimizable batch job over the whole
-frontier:
+Every frontier is ADMITTED once, by the job that writes it, and a
+round only numbers and fetches what admission wrote. Admission
+(``FrontierAdmission``) runs over the candidates of a frontier — the
+expansions of the round just fetched plus the rows it deferred, the
+seeds, or a resumed checkpoint's frontier:
 
-    frontier → canonicalize/hash/host → scope filter (P4)
-             → ANTI JOIN seen [bloom pre-filter] (J1)
-             → within-round first-occurrence dedup (J2 equivalence)
-             → HEAD-model probe join dropping suspicious image/* (P5/P6)
-             → [robots filter — north_rule option]
-             → global seq on (round, parent_seq, sibling_rank) (O1-O4)
-             → budget cut seq < B (P9/O7)
-             → GET-model join vs web + one mapInPandas extract pass
-             → politeness schedule (applyInPandas per host, T1/T2)
-             → expansions (J4/O4) → anti-join seen → next frontier
-             → snapshot commit {frontier, seen, pages, host_state,
-               metrics} (T6 — resumable, per-partition lineage)
+    candidates → within-round first-occurrence dedup (J2 equivalence)
+               → derive host / url_hash / host_shard
+               → ANTI JOIN seen [bloom pre-filter] (J1)
+               → HEAD-model probe dropping suspicious image/* (P5/P6)
+               → [robots filter — north_rule option]
+               → [per-host rank — the max_per_host_per_round throttle]
+               → seq_bucket stamp + per-bucket counts (Observation)
+               → frontier snapshot write
+
+A Spark round then does three things, with no job of its own before
+the fetch:
+
+    due = frontier [host_rank ≤ k]
+        → global seq on (round, parent_seq, sibling_rank) (O1-O4) from
+          driver-known bucket offsets, inside the fetch job
+        → budget cut seq < B (P9/O7)
+        → GET-model join vs web + one mapInArrow extract pass
+        → seen += pages (J3), bloom sidecar refresh
+        → admission of the next frontier (above)
+        → snapshot commit {frontier, pages} + state (T6 — resumable)
+
+Tiny rounds run on the driver instead (plans/fastround.py); a fast
+round whose next frontier outgrows ``fast_round_max`` stamps it the
+way admission would, and the Spark rounds take over. Politeness clocks
+(T1/T2) are derived once from the pages snapshots at the end.
 
 Ordering-parity proof obligations (vs the sequential reference; tested
 against the golden oracle in tests/test_golden.py):
@@ -28,14 +44,22 @@ against the golden oracle in tests/test_golden.py):
   engine therefore retries in-round and only accounts the extra
   politeness draws;
 - expansions admitted against end-of-round seen ≡ admission-time seen
-  (a dupe admitted mid-round is pop-skipped later either way).
+  (a dupe admitted mid-round is pop-skipped later either way); probe,
+  robots and the throttle are pure functions of the URL and of the
+  frontier, so applying them at admission instead of at pop time
+  changes no output;
+- the seq buckets are a monotone map of parent_seq, and parent_seq
+  order is priority order within any frontier, deferred rows included
+  (operators/frontier.py) ⇒ bucket offsets + a per-bucket row_number
+  equal a global sort.
 
 Scale posture: frontier/seen/pages are parquet snapshots (Iceberg when
 the jar is present — sources.catalog shim), re-read each round, so
-lineage never grows; the global sequence is the range-partition rank
-pattern (no one-task sort); the seen anti-join gets a bloom sidecar
-pre-filter; hosts shard by pmod(xxhash64(host), n_host_shards) and AQE
-splits skewed joins at runtime.
+lineage never grows; the global sequence is a per-bucket rank with
+driver-known offsets (no one-task sort, no sampling job); the seen
+anti-join gets a bloom sidecar pre-filter; hosts shard by
+pmod(xxhash64(host), n_host_shards) and AQE splits skewed joins at
+runtime.
 """
 
 from __future__ import annotations
@@ -44,7 +68,7 @@ import tempfile
 import time
 from dataclasses import dataclass, field
 
-import pandas as pd
+import pandas as pd  # noqa: F401  (resolves prepare_fetch_table's UDF type hints)
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -60,11 +84,13 @@ from ..operators.fetch import (
 )
 from ..operators.frontier import (
     FRONTIER_SCHEMA,
-    FRONTIER_SCHEMA_V2,
+    FRONTIER_SCHEMA_BUCKETED,
+    FRONTIER_SCHEMA_RANKED,
     PRIORITY_COLS,
     assign_global_seq,
     dedup_within_round,
     expand_frontier,
+    seq_bucket_col,
 )
 from ..operators.politeness import SCHEDULE_SCHEMA, make_schedule_fn
 from ..operators.robots import RobotsCache, robots_allows_udf
@@ -77,12 +103,16 @@ from ..sources.catalog import SnapshotCatalog
 from ..sources.sitemap import expand_sitemaps
 from .fastround import (
     run_fast_round,
+    stamp_frontier,
     write_frontier_parquet,
     write_pages_parquet,
 )
 
 SEEN_SCHEMA = "url_hash long, url_norm string, host_shard int"
 HOST_STATE_SCHEMA = "host string, next_ix long, clock_s double, attempts long"
+# version of the checkpoint layout and state a resume can read; a
+# checkpoint without it, or with another, is refused
+SNAPSHOT_FORMAT = 1
 
 
 @dataclass
@@ -109,7 +139,7 @@ class CrawlConfig:
     # seen the sidecar takes over regardless.
     bloom_min_seen: int = 2_000_000
     # max suspicious-image rows collectable for the probe fast path
-    # (above this the per-round probe semi-join runs instead); 0
+    # (above this, admission probes with a semi-join instead); 0
     # forces the join path (used by parity tests)
     probe_broadcast_max: int = 2_000_000
     # production politeness throttle: at most k fetches per host per
@@ -231,6 +261,158 @@ def prepare_fetch_table(
     return prepared
 
 
+@dataclass
+class FrontierAdmission:
+    """Writes a frontier a Spark round can consume as it is:
+    deduplicated, not seen, probe- and robots-filtered, ranked per host
+    under a cap, and stamped with ``seq_bucket``, with its per-bucket
+    due counts collected by an Observation on the write job. Its
+    candidates are in scope already (expansions are scope-filtered at
+    discovery, seeds when they are made). Built once per crawl; its
+    column expressions are loop-invariant."""
+
+    catalog: SnapshotCatalog
+    config: CrawlConfig
+    probe: DataFrame  # (url_norm, _probe_ct) projection of the web table
+    robots_filter: object  # pandas UDF url_norm → allowed, or None
+    n_part: int
+
+    def __post_init__(self):
+        # built once: rebuilding the per-bucket metrics and the window
+        # costs a few hundred py4j round-trips per round otherwise
+        k = self.config.max_per_host_per_round
+        in_bucket = [F.col("seq_bucket") == i for i in range(self.n_part)]
+        if k is None:
+            self.metrics = [
+                F.sum(b.cast("long")).alias(f"b{i}") for i, b in enumerate(in_bucket)
+            ]
+            self.schema = FRONTIER_SCHEMA_BUCKETED
+        else:
+            # only rows within the cap are due; the rest are counted so
+            # the loop knows a round deferred rows
+            due = F.col("host_rank") <= k
+            self.metrics = [
+                F.sum((b & due).cast("long")).alias(f"b{i}")
+                for i, b in enumerate(in_bucket)
+            ] + [F.count(F.lit(1)).alias("rows")]
+            self.schema = FRONTIER_SCHEMA_RANKED
+        self.host_window = Window.partitionBy("host").orderBy(
+            *[F.col(c) for c in PRIORITY_COLS]
+        )
+
+    def _probe_join(self, f: DataFrame) -> DataFrame:
+        """P5/P6 — HEAD-model probe for candidates the fetch kernel did
+        not already filter: only suspicious URLs consult the content
+        type; image/* are skipped (scraper.py:81-84). The probe table
+        is semi-pruned by the (tiny) suspicious key set first, so the
+        planner never broadcasts the full probe projection."""
+        susp = f.filter(suspicious_pred(F.col("url_norm")))
+        rest = f.filter(~suspicious_pred(F.col("url_norm")))
+        probe_small = self.probe.join(
+            F.broadcast(susp.select("url_norm")), on="url_norm", how="left_semi"
+        )
+        susp_kept = (
+            susp.join(F.broadcast(probe_small), on="url_norm", how="left")
+            .filter(
+                F.col("_probe_ct").isNull()
+                | ~F.col("_probe_ct").startswith("image/")
+            )
+            .drop("_probe_ct")
+        )
+        return rest.unionByName(susp_kept)
+
+    def __call__(
+        self,
+        cand: DataFrame,
+        round_id: int,
+        table: str,
+        seen: DataFrame,
+        seen_count: int,
+        bloom_bc=None,
+        probe_filtered: bool = False,
+        bucket_lo: int = -1,
+        bucket_span: int = 1,
+    ) -> tuple[DataFrame, dict[int, int], int]:
+        """Admit ``cand`` (FRONTIER_SCHEMA rows without ``url``) and
+        write it as ``table`` at ``round_id``. ``probe_filtered``: the
+        candidates already dropped the probe-skip set — the fetch
+        kernel's ``discovered_norm`` expansions (plus rows admitted
+        before), or seeds filtered on the driver.
+        ``[bucket_lo, bucket_lo + bucket_span)`` is the seq range of the
+        round whose pages are the candidates' parents.
+
+        Returns (frontier read back, due rows per seq bucket, rows
+        deferred by the per-host cap)."""
+        config = self.config
+        k = config.max_per_host_per_round
+        # candidates carry no ``url`` (it is url_norm verbatim for every
+        # expansion row), so each row crosses the dedup exchange with
+        # one string, not two (guide §2.3: shuffle fewer bytes); it is
+        # re-aliased after the anti-join
+        cand = dedup_within_round(cand)
+        # derive (host, url_hash, host_shard) ONCE — they ride the
+        # frontier file so no later round recomputes them
+        cand = (
+            cand.withColumn("host", host_udf(F.col("url_norm")))
+            .withColumn("url_hash", F.xxhash64(F.col("url_norm")))
+            .withColumn(
+                "host_shard",
+                F.pmod(
+                    F.xxhash64(F.col("host")),
+                    F.lit(config.n_host_shards),
+                ).cast("int"),
+            )
+        )
+        admitted = anti_join_seen(
+            cand, seen, bloom_bc,
+            seen_count=seen_count, broadcast_below=config.bloom_min_seen,
+        )
+        f = admitted.select(
+            F.col("url_norm").alias("url"),
+            "round_enqueued", "parent_seq", "sibling_rank",
+            "url_norm", "host", "url_hash", "host_shard"
+        )
+        if not probe_filtered:
+            f = self._probe_join(f)
+        if self.robots_filter is not None:
+            f = f.filter(self.robots_filter(F.col("url_norm")))
+        if k is not None:
+            f = f.withColumn("host_rank", F.row_number().over(self.host_window))
+        f = f.withColumn(
+            "seq_bucket", seq_bucket_col(bucket_lo, bucket_span, self.n_part)
+        )
+        obs = Observation(f"{table}_{round_id}")
+        f = f.observe(obs, *self.metrics)
+        f.sparkSession.sparkContext.setJobDescription(
+            f"crawl r{round_id}: expand+admit+frontier-write"
+        )
+        path = self.catalog.write_table(table, round_id, f)
+        row = obs.get  # free: rode the write job
+        counts = {i: int(row[f"b{i}"] or 0) for i in range(self.n_part)}
+        deferred = 0 if k is None else int(row["rows"]) - sum(counts.values())
+        return f.sparkSession.read.schema(self.schema).parquet(path), counts, deferred
+
+
+def _check_resumable(state: dict, base: str, config: CrawlConfig) -> None:
+    """Refuse a checkpoint this crawl cannot continue exactly."""
+    if state.get("format") != SNAPSHOT_FORMAT:
+        raise ValueError(
+            f"checkpoint format {state.get('format')!r} is not "
+            f"{SNAPSHOT_FORMAT}; it cannot be resumed"
+        )
+    if state["base"] != base:
+        raise ValueError(f"resume with base {base!r}, checkpoint has {state['base']!r}")
+    # a different shard count would mis-route bloom lookups for keys
+    # seen before the resume; host ranks were stamped at admission under
+    # the checkpoint's cap, so a changed cap cannot be honoured either
+    for key in ("n_host_shards", "max_per_host_per_round"):
+        if state[key] != getattr(config, key):
+            raise ValueError(
+                f"resume with {key}={getattr(config, key)} but the "
+                f"checkpoint was written with {state[key]}; use the same value"
+            )
+
+
 def run_crawl(
     spark: SparkSession,
     web: DataFrame,
@@ -240,6 +422,7 @@ def run_crawl(
 ) -> CrawlResult:
     base = normalize_url(config.base_url)  # main.py:111
     budget = config.budget if config.discovery else 1
+    cap = config.max_per_host_per_round
     catalog = SnapshotCatalog(
         config.checkpoint_dir or tempfile.mkdtemp(prefix="wormpy_spark_ckpt_")
     )
@@ -255,13 +438,13 @@ def run_crawl(
     # the probe scan reads only url_norm + content_type)
     probe = web.select("url_norm", F.col("content_type").alias("_probe_ct"))
 
-    # HEAD-probe fast path: suspicious URLs (media extensions / query
+    # HEAD-probe skip set: suspicious URLs (media extensions / query
     # strings) are the only ones that consult a content type, and only
     # "image/*" skips (P5/P6). Collect the suspicious slice's content
-    # types ONCE and broadcast the skip SET — this replaces a per-round
-    # full probe scan + two broadcast-join jobs with one JVM isin-style
-    # lookup. Gated: above the cap the per-round semi-join path below
-    # stays (at 10^10 scale the probe is a bucketed lookup table).
+    # types ONCE and broadcast the skip SET: the fetch kernel then drops
+    # those URLs from each page's expansions, and fast rounds look them
+    # up on the driver. Gated: above the cap admission probes with a
+    # semi-join (at 10^10 scale the probe is a bucketed lookup table).
     probe_skip_bc = None
     prepared_skip = getattr(web, "_wormpy_probe_skip", None)
     prepared_skip_size = getattr(web, "_wormpy_probe_skip_size", None)
@@ -290,13 +473,6 @@ def run_crawl(
             )
         del susp_rows
 
-    if probe_skip_bc is not None:
-        from pyspark.sql.functions import pandas_udf as _pandas_udf
-
-        @_pandas_udf("boolean")
-        def _probe_skips(urls: pd.Series) -> pd.Series:
-            return urls.isin(probe_skip_bc.value)
-
     # fetch side prepared ONCE: hash-partitioned on the join key and
     # persisted, so every round's fetch join exchanges only the (tiny)
     # due side — page BODIES cross a shuffle exactly once per crawl,
@@ -304,11 +480,11 @@ def run_crawl(
     # in round-1 event logs). On a cluster this is the bucketed-table
     # layout of the web snapshot; callers may prepare it once up front
     # with prepare_fetch_table() and reuse it across crawls.
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     prepared = getattr(web, "_wormpy_prepared", False)
     if prepared:
         web_fetch = web.drop("url", "host", "links")
     else:
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
         web_fetch = (
             web.drop("url", "host", "links")
             .repartition(n_part, "url_norm")
@@ -320,12 +496,7 @@ def run_crawl(
 
     def read_pages_snaps(paths: list[str]) -> DataFrame:
         """Snapshot read with the known PAGES_SCHEMA — skips the
-        per-call footer/schema-inference job. Resumed crawls keep
-        inference: an old checkpoint may predate newer columns and the
-        explicit schema would null them instead of triggering the
-        documented backfill paths."""
-        if config.resume:
-            return spark.read.parquet(*paths)
+        per-call footer/schema-inference job."""
         return spark.read.schema(PAGES_SCHEMA).parquet(*paths)
 
     def seen_from_pages(rounds_list: list[int]) -> DataFrame:
@@ -335,82 +506,65 @@ def run_crawl(
         write per round → O(delta))."""
         if not rounds_list:
             return _empty(spark, SEEN_SCHEMA)
-        paths = [f"{catalog.root}/pages/snap-{rr:06d}" for rr in sorted(set(rounds_list))]
-        df = read_pages_snaps(paths)
-        if "host_shard" in df.columns:
-            shard = F.col("host_shard")
-        else:
-            # pre-host_shard checkpoint (resume compatibility): backfill
-            # the shard from url_norm — same formula the loop uses
-            shard = F.pmod(
-                F.xxhash64(host_udf(F.col("url_norm"))),
-                F.lit(config.n_host_shards),
-            ).cast("int")
-        return df.select(
-            F.xxhash64("url_norm").alias("url_hash"),
-            "url_norm",
-            shard.alias("host_shard"),
+        paths = [catalog.table_path("pages", rr) for rr in sorted(set(rounds_list))]
+        return read_pages_snaps(paths).select(
+            F.xxhash64("url_norm").alias("url_hash"), "url_norm", "host_shard"
         )
 
+    def commit(r: int, tables: dict[str, str], **extra) -> None:
+        catalog.commit(
+            r,
+            tables,
+            state={
+                "format": SNAPSHOT_FORMAT,
+                "base": base,
+                "processed": processed,
+                "round": r,
+                "budget": budget,
+                "sitemap_urls": sitemap_urls,
+                "metrics_rows": metrics_rows,
+                "n_host_shards": config.n_host_shards,
+                "max_per_host_per_round": cap,
+                **extra,
+            },
+        )
+
+    admit = FrontierAdmission(catalog, config, probe, robots_filter, n_part)
+    # the frontier a round consumes: driver-resident rows for a fast
+    # round, or an admitted snapshot with its due rows per seq bucket
+    # and the rows its per-host cap defers
+    frontier_rows: list[tuple] | None = None
+    seen_set: set[str] | None = None
+    frontier: DataFrame | None = None
+    counts: dict[int, int] = {}
+    n_deferred = 0
+    # admitted on Spark by the first round: (candidates, whether the
+    # probe already filtered them, parent seq range start, span)
+    entry = None
     if config.resume and catalog.latest_round() is not None:
         state = catalog.state()
-        assert state["base"] == base, "resume with a different base URL"
-        ck_shards = state.get("n_host_shards")
-        if ck_shards is not None and ck_shards != config.n_host_shards:
-            # a different shard count would mis-route bloom lookups for
-            # keys seen before the resume — refuse rather than corrupt
-            raise ValueError(
-                f"resume with n_host_shards={config.n_host_shards} but the "
-                f"checkpoint was written with {ck_shards}; use the same value"
-            )
-        start_round = state["round"] + 1
+        _check_resumable(state, base, config)
+        last = state["round"]
+        start_round = last + 1
         processed = state["processed"]
-        # frontier parent_seq bounds for the bucketed seq path; old
-        # checkpoints lack the key — (-1, processed) is always valid
-        # (loose bounds skew buckets, never ordering)
-        parent_bounds = tuple(state.get("parent_bounds", (-1, processed)))
-        sitemap_urls = state.get("sitemap_urls", [])
+        sitemap_urls = state["sitemap_urls"]
+        metrics_rows = state["metrics_rows"]
         seen = seen_from_pages(catalog.rounds())
-        pending_round = state.get("expansion_pending")
-        if pending_round is not None:
-            # the final committed round deferred its expansion (its
-            # frontier would only ever be read by a resume like this
-            # one): rebuild it deterministically from the committed
-            # pages snapshot — same expansion, same dedup, same
-            # admission anti-join the eager path would have run
-            pages_prev = catalog.read(spark, "pages")
+        if "expansion_pending" in state:
+            # the final committed round deferred its expansion (no
+            # round it ran would read it, and it deferred no rows):
+            # rebuild it from the committed pages snapshot
             cand = expand_frontier(
-                pages_prev, base, next_round=pending_round + 1
-            )
-            cand = dedup_within_round(cand)
-            cand = (
-                cand.withColumn("host", host_udf(F.col("url_norm")))
-                .withColumn("url_hash", F.xxhash64(F.col("url_norm")))
-                .withColumn(
-                    "host_shard",
-                    F.pmod(
-                        F.xxhash64(F.col("host")),
-                        F.lit(config.n_host_shards),
-                    ).cast("int"),
-                )
-            )
-            frontier = anti_join_seen(
-                cand, seen, None,
-                seen_count=processed,
-                broadcast_below=config.bloom_min_seen,
-            ).select(
-                "url", "round_enqueued", "parent_seq", "sibling_rank",
-                "url_norm", "host", "url_hash", "host_shard"
+                read_pages_snaps([catalog.table_path("pages", last)]),
+                base, next_round=start_round,
             )
         else:
-            frontier = catalog.read(spark, "frontier")
-        resume_frontier_exact = pending_round is not None
-        metrics_rows = state.get("metrics_rows", [])
-        # resume always re-enters on the Spark path (frontier/seen are
-        # snapshot-resident); tiny post-resume rounds still work, they
-        # just do not take the driver shortcut
-        frontier_rows = None
-        seen_set = None
+            cand = spark.read.schema(FRONTIER_SCHEMA).parquet(
+                catalog.table_path("frontier", last)
+            )
+        # the candidates' parents are the last round's pages
+        fetched_last = metrics_rows[-1]["fetched"]
+        entry = (cand.drop("url"), False, processed - fetched_last, fetched_last)
     else:
         start_round = 0
         processed = 0
@@ -428,11 +582,25 @@ def run_crawl(
                 (u, 0, -1, i + 1, normalize_url(u))
                 for i, u in enumerate(sitemap_urls)
             ]
-        frontier = spark.createDataFrame(seed_rows, FRONTIER_SCHEMA)
-        resume_frontier_exact = False
-        frontier_rows = list(seed_rows)
-        seen_set = set()
-        parent_bounds = (-1, 0)  # seeds carry parent_seq = -1
+        # P4 scope, and P5/P6 when the skip set exists: the fetch
+        # kernel filters expansions at discovery, and seeds here — on a
+        # handful of driver rows, instead of a probe semi-join job
+        skip = probe_skip_bc.value if probe_skip_bc is not None else ()
+        seed_rows = [
+            row for row in seed_rows
+            if row[4].startswith(base) and row[4] not in skip
+        ]
+        if (
+            config.fast_round_max > 0
+            and probe_skip_bc is not None
+            and len(seed_rows) <= config.fast_round_max
+        ):
+            frontier_rows = seed_rows
+            seen_set = set()
+        else:
+            seeds = spark.createDataFrame(seed_rows, FRONTIER_SCHEMA)
+            # seeds carry parent_seq -1
+            entry = (seeds.drop("url"), probe_skip_bc is not None, -1, 1)
 
     pages_rounds: list[int] = catalog.rounds() if config.resume else []
     bloom_bc = None
@@ -443,53 +611,8 @@ def run_crawl(
     # snapshot every round — an O(total-seen) parquet re-read + re-hash
     # per round; the cache makes it O(delta): cached seen ∪ this
     # round's snapshot)
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # True when the current frontier is KNOWN globally dedup'd at write
-    # time (expansion/fastround output with no per-host deferral in
-    # play): the loop's J2 dedup shuffle is then an identity and is
-    # skipped — one full frontier exchange per round saved. Seeds (base
-    # may repeat in the sitemap list) and resumed frontiers (writer
-    # config unknown) keep the dedup.
-    frontier_deduped = False
-    # True when the current frontier's ADMISSION already anti-joined
-    # every row against the complete seen set at write time (expansion
-    # with the fresh-at-admission bloom + exact suspects join, or
-    # fastround's driver seen_set) — the loop's J1 re-check (a bloom
-    # UDF pass + exact anti-join over the whole frontier, the biggest
-    # fixed cost of a big round's seq phase) is then an identity and is
-    # skipped. Seeds and resumed frontiers keep it.
-    frontier_admission_exact = False
-    # Fused-seq state: when the expansion ALSO applied the probe-skip
-    # (P5/P6) and robots filters at admission — provably output-
-    # identical, a skipped URL never gets a seq and never enters seen
-    # on either path — and stamped each row's deterministic range
-    # bucket (``seq_bucket``), the per-bucket row counts ride the
-    # frontier WRITE job as an Observation. The next round then knows
-    # its offsets (and n_eligible) driver-side: the whole filter chain
-    # is an identity and the seq assignment fuses into the fetch job —
-    # zero extra Spark jobs per round (guide §2.4: the counts job was
-    # a pure per-round floor, ~1s + planning per round at any core
-    # count). Seeds, resumed frontiers and deferral rounds fall back.
-    fused_counts: dict[int, int] | None = None
-    if resume_frontier_exact:
-        # the resume-rebuilt frontier went through dedup + the exact
-        # admission anti-join just above
-        frontier_deduped = True
-        frontier_admission_exact = True
 
     sc = spark.sparkContext
-    # loop-invariant expression trees, built once: Column/Window
-    # objects are immutable and reusable, and rebuilding the 32
-    # per-bucket observation metrics plus the bucket window costs a
-    # few hundred py4j round-trips per round otherwise
-    bucket_metrics = [
-        F.sum((F.col("seq_bucket") == i).cast("long")).alias(f"b{i}")
-        for i in range(n_part)
-    ]
-    bucket_window = Window.partitionBy("seq_bucket").orderBy(
-        *[F.col(c) for c in PRIORITY_COLS]
-    )
-
     r = start_round
     while r < config.max_rounds and processed < budget:
         t0 = time.time()
@@ -498,13 +621,7 @@ def run_crawl(
         # ---- driver fast path: whole tiny round on the driver, one
         # JVM-only Spark job (the web key lookup collected as Arrow),
         # the extraction kernel in-process — see plans/fastround.py ----
-        if (
-            frontier_rows is not None
-            and seen_set is not None
-            and config.fast_round_max > 0
-            and probe_skip_bc is not None
-            and len(frontier_rows) <= config.fast_round_max
-        ):
+        if frontier_rows is not None:
             sc.setJobDescription(f"crawl r{r}: fast round")
             fr = run_fast_round(
                 r, frontier_rows, seen_set, processed, budget, base,
@@ -515,29 +632,20 @@ def run_crawl(
             pages_r_path = catalog.table_path("pages", r)
             write_pages_parquet(pages_r_path, fr.pages)
             frontier_path = catalog.table_path("frontier", r)
-            # fused-seq info, driver-side (mirrors the Spark expansion's
-            # Observation): fastround admission already applied probe/
-            # robots filters, so bucket counts here let a handover round
-            # take the fused path with zero standalone actions
-            fast_counts: dict[int, int] | None = None
-            seq_buckets = None
-            if config.max_per_host_per_round is None:
-                lo = processed
-                span = max(fr.due_count, 1)
-                seq_buckets = []
-                fast_counts = {}
-                for (_u, _renq, pseq, _srank, _un) in fr.frontier_next:
-                    b = (pseq - lo) * n_part // span
-                    b = 0 if b < 0 else (n_part - 1 if b >= n_part else b)
-                    seq_buckets.append(b)
-                    fast_counts[b] = fast_counts.get(b, 0) + 1
+            handover = len(fr.frontier_next) > config.fast_round_max
+            rows, buckets, ranks = fr.frontier_next, None, None
+            if cap is None or handover:
+                # stamped the way admission stamps a Spark-round
+                # frontier, so a handover round needs no job before its
+                # fetch (uncapped fast frontiers are always stamped)
+                rows, buckets, ranks, counts, n_deferred = stamp_frontier(
+                    fr.frontier_next, processed, fr.due_count, n_part, cap
+                )
             write_frontier_parquet(
-                frontier_path, fr.frontier_next, config.n_host_shards,
-                seq_buckets,
+                frontier_path, rows, config.n_host_shards, buckets, ranks
             )
             pages_rounds.append(r)
             processed += fr.due_count
-            parent_bounds = (processed - fr.due_count, processed)
             metrics_rows.append(
                 {
                     "round": r,
@@ -552,177 +660,41 @@ def run_crawl(
                     "expand_s": fr.expand_s,
                 }
             )
-            catalog.commit(
-                r,
-                {"pages": pages_r_path, "frontier": frontier_path},
-                state={
-                    "base": base,
-                    "processed": processed,
-                    "round": r,
-                    "budget": budget,
-                    "sitemap_urls": sitemap_urls,
-                    "metrics_rows": metrics_rows,
-                    "n_host_shards": config.n_host_shards,
-                "parent_bounds": list(parent_bounds),
-                },
-            )
-            if len(fr.frontier_next) <= config.fast_round_max:
-                frontier_rows = fr.frontier_next
-            else:
+            commit(r, {"pages": pages_r_path, "frontier": frontier_path})
+            if handover:
                 # hand over to the Spark path: frontier + seen continue
                 # from the snapshots just written
                 frontier_rows = None
                 seen_set = None
-                frontier = spark.read.parquet(frontier_path)
-                # fastround's frontier_next is globally first-wins
-                # dedup'd (best-dict, fastround.py) unless deferral
-                # rows were unioned in; its admission is exact (driver
-                # seen_set membership)
-                frontier_deduped = config.max_per_host_per_round is None
-                frontier_admission_exact = True
+                frontier = spark.read.schema(admit.schema).parquet(frontier_path)
                 seen = seen_from_pages(pages_rounds)
-                fused_counts = fast_counts
+            else:
+                frontier_rows = fr.frontier_next
             r += 1
             continue
-        frontier_rows = None
-        seen_set = None
 
-        # ---- fused-seq fast path: the previous round's expansion
-        # already applied the complete filter chain at admission and
-        # published per-bucket counts via its write-job Observation, so
-        # this round needs NO standalone action before the fetch: the
-        # offsets are driver arithmetic and the bucket-window seq
-        # assignment rides the fetch job itself. ----
-        if fused_counts is not None:
-            deferred = None
-            seq_cache = None
-            n_eligible = sum(fused_counts.values())
-            t_seq = time.time()
-            if n_eligible == 0:
-                break
-            offsets: dict[int, int] = {}
-            acc = processed
-            for pid in sorted(fused_counts):
-                if fused_counts[pid]:
-                    offsets[pid] = acc
-                    acc += fused_counts[pid]
-            mapping = F.create_map(
-                *[F.lit(x) for pid_off in offsets.items() for x in pid_off]
+        # ---- Spark round: admission wrote this frontier filtered and
+        # stamped, and published its due rows per seq bucket, so the
+        # seq assignment is driver arithmetic plus a bucket window that
+        # rides the fetch job — no job runs before the fetch, except
+        # the admission of the seeds or of a resumed frontier. ----
+        if entry is not None:
+            cand, probed, lo, span = entry
+            entry = None
+            frontier, counts, n_deferred = admit(
+                cand, r, "entry", seen, processed, probe_filtered=probed,
+                bucket_lo=lo, bucket_span=span,
             )
-            seqd = frontier.withColumn(
-                "seq",
-                (
-                    mapping[F.col("seq_bucket")]
-                    + F.row_number().over(bucket_window)
-                    - 1
-                ).cast("long"),
-            )
-            due = seqd.filter(F.col("seq") < budget).withColumn(
-                "round", F.lit(r).cast("int")
-            )
-        else:
-            # url_norm is carried by the frontier (seeds canonicalized at
-            # seeding, expansions at discovery), and v2 frontiers also
-            # carry (host, url_hash, host_shard) from admission — no
-            # per-round UDF/hash re-derivation. v1 frontiers (seeds, old
-            # checkpoints) are backfilled here.
-            if "host" in frontier.columns:
-                f = frontier
-            else:
-                f = (
-                    frontier.withColumn("host", host_udf(F.col("url_norm")))
-                    .withColumn("url_hash", F.xxhash64(F.col("url_norm")))
-                    .withColumn(
-                        "host_shard",
-                        F.pmod(
-                            F.xxhash64(F.col("host")), F.lit(config.n_host_shards)
-                        ).cast("int"),
-                    )
-                )
-            in_scope = f.filter(F.col("url_norm").startswith(base))  # P4
-            if frontier_admission_exact:
-                # J1 already applied exactly at admission (fresh bloom +
-                # exact suspects join, or fastround's driver set) and seen
-                # only grows by rows FETCHED since — which are disjoint
-                # from this frontier by construction
-                not_seen = in_scope
-            else:
-                not_seen = anti_join_seen(  # J1
-                    in_scope, seen, bloom_bc,
-                    seen_count=processed, broadcast_below=config.bloom_min_seen,
-                )
-            deduped = (                                               # J2 equiv.
-                not_seen if frontier_deduped else dedup_within_round(not_seen)
-            )
-
-            # P5/P6 — HEAD-model probe: only suspicious URLs consult the
-            # content type; image/* are skipped (scraper.py:81-84).
-            susp = deduped.filter(suspicious_pred(F.col("url_norm")))
-            rest = deduped.filter(~suspicious_pred(F.col("url_norm")))
-            if probe_skip_bc is not None:
-                # fast path: membership in the once-collected skip set
-                susp_kept = susp.filter(~_probe_skips(F.col("url_norm")))
-            else:
-                # scale path: semi-prune the probe table by the (tiny)
-                # suspicious key set first — otherwise the planner
-                # broadcasts the full probe projection every round
-                probe_small = probe.join(
-                    F.broadcast(susp.select("url_norm")), on="url_norm", how="left_semi"
-                )
-                susp_kept = (
-                    susp.join(F.broadcast(probe_small), on="url_norm", how="left")
-                    .filter(
-                        F.col("_probe_ct").isNull()
-                        | ~F.col("_probe_ct").startswith("image/")
-                    )
-                    .drop("_probe_ct")
-                )
-            eligible = rest.unionByName(susp_kept)
-            if robots_filter is not None:
-                eligible = eligible.filter(robots_filter(F.col("url_norm")))
-
-            deferred = None
-            if config.max_per_host_per_round is not None:
-                hw = Window.partitionBy("host").orderBy(
-                    *[F.col(c) for c in PRIORITY_COLS]
-                )
-                ranked = eligible.withColumn("_hr", F.row_number().over(hw))
-                deferred = (
-                    ranked.filter(F.col("_hr") > config.max_per_host_per_round)
-                    .select("url", "round_enqueued", "parent_seq", "sibling_rank",
-                            "url_norm", "host", "url_hash", "host_shard")
-                )
-                eligible = ranked.filter(
-                    F.col("_hr") <= config.max_per_host_per_round
-                ).drop("_hr")
-
-            # one computation of the whole filter chain per round: the seq
-            # assignment persists its range-partitioned output (also pinning
-            # the partitioning so offsets stay valid — see assign_global_seq),
-            # its count collect materializes the cache, and the fetch reuses it.
-            # Without deferral every frontier row shares round_enqueued, and
-            # parent_seq is bounded by the previous round's seq range (driver-
-            # known) — deterministic bucket boundaries, which drops the range
-            # partitioner's per-round SAMPLING job (half the seq phase's fixed
-            # job cost). Deferral mixes round_enqueued values, where parent_seq
-            # alone is not monotone in the priority order → sampling path.
-            bucket_hint = (
-                ("parent_seq", parent_bounds[0], parent_bounds[1])
-                if config.max_per_host_per_round is None
-                else None
-            )
-            sc.setJobDescription(f"crawl r{r}: global seq")
-            seqd, n_eligible, seq_cache = assign_global_seq(
-                eligible, PRIORITY_COLS, start=processed, range_bucket=bucket_hint
-            )
-            t_seq = time.time()
-            if n_eligible == 0:
-                seq_cache.unpersist()
-                break
-            due = seqd.filter(F.col("seq") < budget).withColumn(
-                "round", F.lit(r).cast("int")
-            )
-
+        n_eligible = sum(counts.values())
+        t_seq = time.time()
+        if n_eligible == 0:
+            break
+        due = frontier if cap is None else frontier.filter(F.col("host_rank") <= cap)
+        due = (
+            assign_global_seq(due, counts, start=processed)
+            .filter(F.col("seq") < budget)
+            .withColumn("round", F.lit(r).cast("int"))
+        )
         due_count = min(n_eligible, budget - processed)
 
         # only the columns the fetch kernel consumes cross the exchange
@@ -808,8 +780,18 @@ def run_crawl(
         else:
             seen_next = delta
         processed_next = processed + due_count
-        will_expand = (
-            processed_next < budget and (r + 1) < config.max_rounds
+        # After the crawl's LAST round (budget exhausted or max_rounds
+        # reached) the expansion — and the bloom refresh that only
+        # feeds its admission — would build a frontier no round ever
+        # consumes. Defer it: commit the pages snapshot with an
+        # expansion_pending flag; a resume rebuilds the frontier
+        # deterministically from that snapshot, so resumability is
+        # unchanged while every non-resumed crawl saves a full
+        # expansion's work. A round that deferred rows under the cap
+        # admits eagerly instead: its deferred rows live only in the
+        # frontier it consumed, not in any pages snapshot.
+        will_expand = processed_next < budget and (
+            r + 1 < config.max_rounds or n_deferred > 0
         )
         if will_expand:
             # materialized by the admission job below; the previous
@@ -820,25 +802,14 @@ def run_crawl(
         # bloom sidecar (covering seen through round r) builds BEFORE
         # the expansion admission, so admission sees a FRESH bitmap and
         # (bloom prefilter + exact suspects anti-join) is EXACT wrt
-        # seen-through-r. That exactness is what lets the NEXT round
-        # skip re-checking its whole frontier against seen (the
-        # admission-exact fast path above) — the biggest fixed cost of
-        # a big round's seq phase. (The former side-thread overlap
-        # saved ~1s/round of bloom-build wall but handed admission a
-        # stale bitmap, whose repair — a full-frontier re-check next
-        # round — cost far more at scale.)
-        # After the crawl's LAST round (budget exhausted or max_rounds
-        # reached) the expansion — and the bloom refresh that only
-        # feeds its admission — would build a frontier no round ever
-        # consumes. Defer it: commit the pages snapshot with an
-        # expansion_pending flag; a resume rebuilds the frontier
-        # deterministically from that snapshot (same expansion, same
-        # admission), so resumability is unchanged while every
-        # non-resumed crawl saves a full expansion's work.
-        final_round = not will_expand
+        # seen-through-r: no round ever re-checks its frontier against
+        # seen. (The former side-thread overlap saved ~1s/round of
+        # bloom-build wall but handed admission a stale bitmap, whose
+        # repair — a full-frontier re-check next round — cost far more
+        # at scale.)
         if (
             config.use_bloom
-            and not final_round
+            and will_expand
             and processed_next >= config.bloom_min_seen
         ):
             sc.setJobDescription(f"crawl r{r}: bloom sidecar")
@@ -888,126 +859,33 @@ def run_crawl(
             bloom_bc = spark.sparkContext.broadcast(bloom_state)
         t_bloom = time.time()
 
-        # expansions → next frontier (J2/J4/O4). Candidates are deduped
-        # GLOBALLY (first occurrence by priority — the same rule
-        # dedup_within_round applies next round, so semantics are
-        # unchanged) BEFORE hashing/sharding/admission: with ~300
-        # outlinks/page the raw candidate stream is ~50x larger than
-        # its distinct set, and everything downstream of this dedup
-        # (anti-join UDF, frontier write, next round's whole filter
-        # chain) now runs on the small side.
-        if config.discovery and not final_round:
-            cand = expand_frontier(pages_r, base, next_round=r + 1)
-            # ``url`` is url_norm verbatim for every expansion row
-            # (expand_frontier selects url_norm twice) — drop the copy
-            # BEFORE the dedup exchange so each candidate row carries
-            # one string, not two, through the round's biggest shuffle;
-            # re-aliased after admission (guide §2.3: shuffle fewer
-            # bytes).
-            cand = dedup_within_round(cand.drop("url"))
-            # derive (host, url_hash, host_shard) ONCE — they ride the
-            # v2 frontier file so no later round recomputes them
-            cand = (
-                cand.withColumn("host", host_udf(F.col("url_norm")))
-                .withColumn("url_hash", F.xxhash64(F.col("url_norm")))
-                .withColumn(
-                    "host_shard",
-                    F.pmod(
-                        F.xxhash64(F.col("host")),
-                        F.lit(config.n_host_shards),
-                    ).cast("int"),
+        # expansions → next frontier (J2/J4/O4): this round's
+        # expansions plus the rows its cap deferred, admitted against
+        # seen-through-r. The kernel already dropped probe-skip URLs
+        # from discovered_norm when the skip set exists, and deferred
+        # rows were probed at their own admission.
+        if will_expand:  # never without discovery: its budget is 1
+            cand = expand_frontier(pages_r, base, next_round=r + 1).drop("url")
+            if n_deferred:
+                cand = (
+                    frontier.filter(F.col("host_rank") > cap)
+                    .select(*cand.columns)
+                    .unionByName(cand)
                 )
+            frontier, counts, n_deferred = admit(
+                cand, r, "frontier", seen, processed_next, bloom_bc,
+                probe_filtered=probe_skip_bc is not None,
+                bucket_lo=processed, bucket_span=processed_next - processed,
             )
-            admitted = anti_join_seen(
-                cand, seen, bloom_bc,
-                seen_count=processed_next, broadcast_below=config.bloom_min_seen,
-            )
-            frontier_next = admitted.select(
-                F.col("url_norm").alias("url"),
-                "round_enqueued", "parent_seq", "sibling_rank",
-                "url_norm", "host", "url_hash", "host_shard"
-            )
-        else:
-            frontier_next = _empty(spark, FRONTIER_SCHEMA_V2)
-        if deferred is not None:
-            # deferred rows keep their original priority, so they sort
-            # ahead of this round's expansions next round
-            frontier_next = deferred.unionByName(frontier_next)
-        # ---- fused-seq instrumentation for the NEXT round: the fetch
-        # kernel already dropped probe-skip URLs (P5/P6) from
-        # discovered_norm at discovery (set lookups on strings already
-        # in the Python worker — no UDF pass here), robots (when on)
-        # filters here, the deterministic parent_seq range bucket is
-        # stamped, and the per-bucket counts ride the write job as an
-        # Observation. Next round then assigns seq with driver-known
-        # offsets inside the fetch job: no standalone action at all.
-        obs_f = None
-        if (
-            config.discovery
-            and not final_round
-            and deferred is None
-            and config.max_per_host_per_round is None
-            and probe_skip_bc is not None
-        ):
-            if robots_filter is not None:
-                frontier_next = frontier_next.filter(
-                    robots_filter(F.col("url_norm"))
-                )
-            # candidates' parent_seq ∈ [processed, processed_next) by
-            # construction (parents are this round's due pages); integer
-            # DIV keeps the bucket map exactly monotone (same contract
-            # as assign_global_seq's range_bucket path)
-            lo = processed
-            span = max(processed_next - processed, 1)
-            bucket = F.expr(
-                f"CAST(((parent_seq - {lo}L) * {n_part}L) DIV {span}L AS INT)"
-            )
-            bucket = F.least(
-                F.lit(n_part - 1), F.greatest(F.lit(0), bucket)
-            )
-            frontier_next = frontier_next.withColumn("seq_bucket", bucket)
-            obs_f = Observation(f"frontier_{r}")
-            frontier_next = frontier_next.observe(obs_f, *bucket_metrics)
-        if final_round:
-            frontier_path = None
-        else:
-            sc.setJobDescription(f"crawl r{r}: expand+admit+frontier-write")
-            frontier_path = catalog.write_table("frontier", r, frontier_next)
-            # the writer's schema is known exactly (v2 + seq_bucket iff
-            # the fused-seq observation ran): an explicit schema skips
-            # the per-round footer/schema-inference job
-            frontier_schema = FRONTIER_SCHEMA_V2 + (
-                ", seq_bucket int" if obs_f is not None else ""
-            )
-            frontier = spark.read.schema(frontier_schema).parquet(frontier_path)
             # the admission job above materialized seen_next; rotate the
             # incremental cache (unpersisting earlier frees the old
             # blocks the new cache's lineage just read)
             if seen_cache is not None:
                 seen_cache.unpersist()
             seen_cache = seen_next
-        if obs_f is not None:
-            counts_row = obs_f.get  # free: rode the write job
-            fused_counts = {
-                i: int(counts_row[f"b{i}"] or 0) for i in range(n_part)
-            }
-        else:
-            fused_counts = None
-        # admitted is dedup_within_round output; deferral union may
-        # reintroduce a URL the expansion also discovered
-        frontier_deduped = config.max_per_host_per_round is None
-        # admission above used the FRESH bloom + exact suspects join
-        # (or the exact broadcast path below bloom_min_seen): next
-        # round's J1 re-check is an identity
-        frontier_admission_exact = True
-        if seq_cache is not None:
-            seq_cache.unpersist()
         pages_r.unpersist()
         t_expand = time.time()
 
-        # next frontier's parents are this round's pages (seq range
-        # [processed, processed_next)) — the bucketed seq path's bounds
-        parent_bounds = (processed, processed_next)
         processed = processed_next
         metrics_rows.append(
             {
@@ -1024,22 +902,10 @@ def run_crawl(
                 "expand_s": round(t_expand - t_bloom, 2),
             }
         )
-        commit_tables = {"pages": pages_r_path}
-        commit_state = {
-            "base": base,
-            "processed": processed,
-            "round": r,
-            "budget": budget,
-            "sitemap_urls": sitemap_urls,
-            "metrics_rows": metrics_rows,
-            "n_host_shards": config.n_host_shards,
-            "parent_bounds": list(parent_bounds),
-        }
-        if frontier_path is not None:
-            commit_tables["frontier"] = frontier_path
+        if will_expand:
+            commit(r, {"pages": pages_r_path, "frontier": catalog.table_path("frontier", r)})
         else:
-            commit_state["expansion_pending"] = r
-        catalog.commit(r, commit_tables, state=commit_state)
+            commit(r, {"pages": pages_r_path}, expansion_pending=r)
 
         r += 1
 
@@ -1051,12 +917,12 @@ def run_crawl(
     # the loop may end while still in fast mode (seen_set-resident):
     # the authoritative seen set is always derivable from the pages
     # snapshots, for fast and Spark rounds alike
-    seen = seen_from_pages(sorted(set(pages_rounds)))
+    seen = seen_from_pages(pages_rounds)
 
     # assemble results across rounds
     if pages_rounds:
         pages = read_pages_snaps(
-            [f"{catalog.root}/pages/snap-{rr:06d}" for rr in sorted(set(pages_rounds))]
+            [catalog.table_path("pages", rr) for rr in sorted(set(pages_rounds))]
         )
     else:
         pages = _empty(spark, PAGES_SCHEMA)

@@ -30,10 +30,15 @@ extraction wins below the crossover that ``fast_round_max`` records.
 Parity obligations (tested: tests/test_golden.py runs entirely through
 this path with default config, and test_properties.py asserts
 fast-vs-Spark equality including a mid-crawl transition):
-- identical filter-chain semantics (scope → seen anti-join → in-round
-  first-occurrence dedup → probe skip → robots → per-host deferral →
-  global seq → budget cut) — same pure predicates the Spark path's
-  column expressions mirror;
+- identical admission semantics: a fast round applies, at pop time,
+  the chain a Spark frontier went through when it was admitted (scope
+  → seen anti-join → in-round first-occurrence dedup → probe skip →
+  robots → per-host rank, deferring rank > k) and then numbers the
+  due rows in priority order up to the budget — the same pure
+  predicates the Spark admission's column expressions mirror;
+- a handover frontier (one that outgrows ``fast_round_max``) leaves
+  stamped as Spark admission would stamp it (``stamp_frontier``), so
+  the first Spark round consumes it with no job before its fetch;
 - identical pages rows: the very same ``make_fetch_extract`` Arrow
   kernel produces them, from the same joined columns;
 - bit-identical ``host_shard``: pure-Python XXH64 (functions.xxhash)
@@ -69,6 +74,7 @@ from ..operators.fetch import (
     PAGES_ARROW_SCHEMA_EXPAND,
     make_fetch_extract,
 )
+from ..operators.frontier import seq_bucket
 
 FRONTIER_ARROW_SCHEMA = pa.schema(
     [
@@ -85,10 +91,14 @@ FRONTIER_ARROW_SCHEMA = pa.schema(
         ("host_shard", pa.int32()),
     ]
 )
-# + the fused-seq bucket column the Spark loop's fused path consumes
+# the Spark-round frontier layouts (FRONTIER_SCHEMA_BUCKETED /
+# FRONTIER_SCHEMA_RANKED in operators/frontier.py)
 FRONTIER_ARROW_SCHEMA_BUCKETED = FRONTIER_ARROW_SCHEMA.append(
     pa.field("seq_bucket", pa.int32())
 )
+FRONTIER_ARROW_SCHEMA_RANKED = FRONTIER_ARROW_SCHEMA.append(
+    pa.field("host_rank", pa.int32())
+).append(pa.field("seq_bucket", pa.int32()))
 
 
 def _write_checked(path: str, table: pa.Table, schema: pa.Schema) -> None:
@@ -111,12 +121,13 @@ def write_pages_parquet(path: str, pages: pa.Table) -> None:
 def write_frontier_parquet(
     path: str, rows: list[tuple], n_host_shards: int = 64,
     seq_buckets: list[int] | None = None,
+    host_ranks: list[int] | None = None,
 ) -> None:
     """rows: (url, round_enqueued, parent_seq, sibling_rank, url_norm);
     the v2 derived columns (host, url_hash, host_shard) are computed
-    here so the Spark loop never re-derives them. ``seq_buckets``
-    (parallel to rows) adds the fused-seq bucket column the Spark
-    loop's fused path consumes (see plans/crawl.py)."""
+    here so the Spark loop never re-derives them. ``seq_buckets`` and
+    ``host_ranks`` (parallel to rows, from ``stamp_frontier``) add the
+    columns a Spark round consumes (see plans/crawl.py)."""
     hosts = [get_domain(r[4]) for r in rows]
     table = pa.table(
         {
@@ -133,10 +144,47 @@ def write_frontier_parquet(
         }
     )
     schema = FRONTIER_ARROW_SCHEMA
+    if host_ranks is not None:
+        table = table.append_column("host_rank", pa.array(host_ranks, pa.int32()))
+        schema = FRONTIER_ARROW_SCHEMA_RANKED
     if seq_buckets is not None:
         table = table.append_column("seq_bucket", pa.array(seq_buckets, pa.int32()))
-        schema = FRONTIER_ARROW_SCHEMA_BUCKETED
+        if host_ranks is None:
+            schema = FRONTIER_ARROW_SCHEMA_BUCKETED
     _write_checked(path, table, schema)
+
+
+def stamp_frontier(
+    rows: list[tuple], lo: int, span: int, n_buckets: int, cap: int | None
+) -> tuple[list[tuple], list[int], list[int] | None, dict[int, int], int]:
+    """What Spark admission stamps on a frontier, computed on the
+    driver for a fast round's ``frontier_next``: each row's seq bucket
+    (``[lo, lo + span)`` is the seq range of the round that discovered
+    it) and, under a per-host ``cap``, its rank within its host in
+    priority order. The rows a capped fast round deferred can repeat a
+    URL its expansion found again, so under a cap the rows are first
+    deduplicated (first by priority wins, as ``dedup_within_round``).
+
+    Returns (rows, buckets, host ranks or None, due rows per bucket,
+    rows deferred by the cap)."""
+    ranks = None
+    if cap is not None:
+        best: dict[str, tuple] = {}
+        for row in sorted(rows, key=lambda t: t[1:4]):
+            best.setdefault(row[4], row)
+        rows = list(best.values())  # priority order
+        per_host: dict[str, int] = {}
+        ranks = []
+        for row in rows:
+            host = get_domain(row[4])
+            per_host[host] = per_host.get(host, 0) + 1
+            ranks.append(per_host[host])
+    buckets = [seq_bucket(row[2], lo, span, n_buckets) for row in rows]
+    counts: dict[int, int] = {}
+    for i, b in enumerate(buckets):
+        if ranks is None or ranks[i] <= cap:
+            counts[b] = counts.get(b, 0) + 1
+    return rows, buckets, ranks, counts, len(rows) - sum(counts.values())
 
 
 @dataclass
